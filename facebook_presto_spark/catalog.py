@@ -15,6 +15,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the table-staging layer behind this catalog
+from facebook_presto_spark.staging import (  # noqa: F401
+    SCRATCH, generate_once, session_views, split_staged)
+
 TABLES = (
     "region",
     "nation",
@@ -62,24 +66,19 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from facebook_presto_spark.plans.tpch import _split_staged
-
     # batch reads go through the multi-file split staging (scan
-    # parallelism, guide §6); the dtype dispatch below keeps working on
-    # either layout because the re-staged copy stores whatever form this
-    # session reads (micro-truncated NTZ, or LONG nanos under the
-    # streaming mirror's nanosAsLong flag — converted identically).
+    # parallelism, guide §6); the re-staged copy stores whatever form
+    # this session reads (micro-truncated NTZ, or LONG nanos under the
+    # streaming mirror's nanosAsLong flag — the flag is part of the
+    # copy's identity, and both forms convert identically below).
     # The readStream mirror keeps the ORIGINAL single file (fixed
     # schema contract), as does the DuckDB oracle.
     df = spark.read.parquet(
-        _split_staged(spark, os.path.join(sf_dir, "events.parquet"))
+        split_staged(spark, os.path.join(sf_dir, "events.parquet"))
     )
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-_REGISTERED: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
 
 def register_schema(spark: SparkSession, schema: str, sf_dir: str = DEFAULT_SF_DIR) -> None:
@@ -125,29 +124,10 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     reference resolves tables against cached connector metadata the same
     way (ConnectorMetadata.getTableHandle against the metastore cache).
     """
-    key = (id(spark), sf_dir)
-    if key in _REGISTERED:
-        cached = _REGISTERED[key]
-        # trust the memo only while the views still exist AND still carry
-        # the memoized schema — callers (and tests) may drop temp views,
-        # or SHADOW a name with a different relation entirely (the
-        # product-test fixtures register an unprefixed `orders`, for
-        # example); existence alone would silently resolve to the
-        # impostor.  spark.table() resolves against the in-catalog plan,
-        # so this never re-reads parquet footers.
-        try:
-            ok = all(
-                spark.catalog.tableExists(name)
-                and spark.table(name).schema == df.schema
-                for name, df in cached.items()
-            )
-        except Exception:
-            ok = False
-        if ok:
-            return cached
-        del _REGISTERED[key]
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    _REGISTERED[key] = dfs
-    return dfs
+    def register() -> dict[str, DataFrame]:
+        dfs = load_tables(spark, sf_dir)
+        for name, df in dfs.items():
+            df.createOrReplaceTempView(name)
+        return dfs
+
+    return session_views(spark, ("tables", sf_dir), register)

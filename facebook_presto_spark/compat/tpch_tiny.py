@@ -4,43 +4,31 @@ The reference's acceptance corpora (hive_tpch goldens, tpch.tiny.*
 testcases, AbstractTestQueries' hardcoded expected rows) are computed on
 the TPCH connector's generated `tiny` schema — scale factor 0.01 of the
 deterministic TPC-H spec data (TpchMetadata.java:86-93).  DuckDB ships
-the same dbgen; exporting it once to parquet gives both engines the
-exact dataset those goldens assume.
+the same dbgen; exporting it once to parquet (under staging.SCRATCH)
+gives both engines the exact dataset those goldens assume.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import SparkSession
 
-STAGE = "/root/repo/.scratch/tpch_tiny"
+from facebook_presto_spark.staging import generate_once, split_staged
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "partsupp",
           "orders", "lineitem")
 
 # tpch-connector column names are the hive/dbgen names minus the table
 # prefix (TpchMetadata/TpchTable); duckdb's dbgen emits the prefixed form.
-_PREFIX = {"region": "r_", "nation": "n_", "customer": "c_",
-           "supplier": "s_", "part": "p_", "partsupp": "ps_",
-           "orders": "o_", "lineitem": "l_"}
+PREFIX = {"region": "r_", "nation": "n_", "customer": "c_",
+          "supplier": "s_", "part": "p_", "partsupp": "ps_",
+          "orders": "o_", "lineitem": "l_"}
 
 
 def generate() -> str:
     """Generate (once) and return the parquet directory."""
-    import duckdb
-
-    if not glob.glob(os.path.join(STAGE, "*.parquet")):
-        os.makedirs(STAGE, exist_ok=True)
-        con = duckdb.connect()
-        con.execute("CALL dbgen(sf=0.01)")
-        for t in TABLES:
-            con.execute(
-                f"COPY (SELECT * FROM {t}) TO '{STAGE}/{t}.parquet' "
-                "(FORMAT PARQUET)"
-            )
-    return STAGE
+    return generate_once("tpch_tiny", "CALL dbgen(sf=0.01)", TABLES)
 
 
 # money columns are DOUBLE in the tpch connector (TpchMetadata /
@@ -52,7 +40,7 @@ _DOUBLE_COLS = {"o_totalprice", "l_extendedprice", "l_discount", "l_tax",
 def unprefixed_select(table: str, columns: list[str], src: str) -> str:
     """SELECT stripping the dbgen prefix → tpch-connector column names,
     with the connector's DOUBLE typing for money columns."""
-    p = _PREFIX[table]
+    p = PREFIX[table]
     exprs = []
     for c in columns:
         e = f"CAST({c} AS DOUBLE)" if c in _DOUBLE_COLS else c
@@ -61,21 +49,15 @@ def unprefixed_select(table: str, columns: list[str], src: str) -> str:
 
 
 def columns_of(table: str) -> list[str]:
-    import duckdb
+    import pyarrow.parquet as pq
 
-    path = os.path.join(generate(), f"{table}.parquet")
-    return [
-        r[0] for r in duckdb.connect().execute(
-            f"DESCRIBE SELECT * FROM read_parquet('{path}')").fetchall()
-    ]
+    return pq.read_schema(os.path.join(generate(), f"{table}.parquet")).names
 
 
 def register_connector_views(spark: SparkSession, con) -> None:
     """Register the tiny tables with *connector* (unprefixed) columns as
     bare names in both engines — the relations AbstractTestQueries and the
     tpch_connector/window_functions/order_by testcases address."""
-    from facebook_presto_spark.plans.tpch import _split_staged
-
     stage = generate()
     for t in TABLES:
         path = os.path.join(stage, f"{t}.parquet")
@@ -90,7 +72,7 @@ def register_connector_views(spark: SparkSession, con) -> None:
         # of CPU in ONE task) parallelize over scan splits; the DuckDB
         # side keeps the original single file
         spath = path if t in ("region", "nation", "supplier") else \
-            _split_staged(spark, path, min_bytes=0, files=16)
+            split_staged(spark, path, files=16)
         spark.sql(
             f"CREATE OR REPLACE TEMP VIEW {t} AS "
             + unprefixed_select(t, cols, f"parquet.`{spath}`")

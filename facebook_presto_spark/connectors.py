@@ -41,11 +41,15 @@ one-split-per-DataLocation file listing.
 
 from __future__ import annotations
 
+import os
 import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from facebook_presto_spark.compat import tpch_tiny
+from facebook_presto_spark.staging import SCRATCH, generate_once, scratch_path
 
 _NAME = r"[A-Za-z_][A-Za-z0-9_]*"
 
@@ -448,12 +452,8 @@ class TpchCatalog:
     """
 
     BASE = "/root/testdata"
-    GEN_BASE = "/root/repo/.scratch/tpch_dbgen"
-    TABLES = ("region", "nation", "customer", "supplier", "part",
-              "partsupp", "orders", "lineitem")
-    _PREFIX = {"region": "r_", "nation": "n_", "customer": "c_",
-               "supplier": "s_", "part": "p_", "partsupp": "ps_",
-               "orders": "o_", "lineitem": "l_"}
+    TABLES = tpch_tiny.TABLES
+    _PREFIX = tpch_tiny.PREFIX
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -467,81 +467,53 @@ class TpchCatalog:
             return schema[2:].replace("_", ".")
         raise ValueError(f"Schema tpch.{schema} does not exist")
 
-    def max_sf(self) -> float:
-        import os
-
-        return float(os.environ.get("SPARK_GRAFT_TPCH_MAX_SF", "1"))
+    def _check_capacity(self, schema: str, sf: str) -> None:
+        cap = float(os.environ.get("SPARK_GRAFT_TPCH_MAX_SF", "1"))
+        if float(sf) > cap:
+            raise ValueError(
+                f"Schema tpch.{schema} exceeds this container's dbgen "
+                f"capacity guard (sf {sf} > {cap}; raise "
+                f"SPARK_GRAFT_TPCH_MAX_SF to generate it anyway)"
+            )
 
     def schema_dir(self, schema: str) -> str | None:
         """The pre-materialized dataset dir, or None (dbgen path)."""
-        import os
-
         sf = self._sf(schema)
         path = os.path.join(self.BASE, f"sf{sf}")
         if os.path.isdir(path):
             return path
-        if float(sf) > self.max_sf():
-            raise ValueError(
-                f"Schema tpch.{schema} exceeds this container's dbgen "
-                f"capacity guard (sf {sf} > {self.max_sf()}; raise "
-                f"SPARK_GRAFT_TPCH_MAX_SF to generate it anyway)"
-            )
+        self._check_capacity(schema, sf)
         return None
 
     def _dbgen_dir(self, schema: str) -> str:
         """Generate (once) and return the dbgen cache dir for a schema."""
-        import os
-
         sf = self._sf(schema)
-        out = os.path.join(self.GEN_BASE, f"sf{sf}")
-        if os.path.exists(os.path.join(out, "_DONE")):
-            return out
-        if float(sf) > self.max_sf():
-            raise ValueError(
-                f"Schema tpch.{schema} exceeds this container's dbgen "
-                f"capacity guard (sf {sf} > {self.max_sf()}; raise "
-                f"SPARK_GRAFT_TPCH_MAX_SF to generate it anyway)"
-            )
-        import duckdb
-
-        os.makedirs(out, exist_ok=True)
-        con = duckdb.connect()
-        con.execute("LOAD tpch")
-        con.execute(f"CALL dbgen(sf={sf})")
+        name = f"tpch_dbgen/sf{sf}"
+        if not os.path.exists(os.path.join(SCRATCH, name, "_DONE")):
+            self._check_capacity(schema, sf)
         # reference types: DOUBLE prices (TpchColumnType DOUBLE), DATE
         # dates; decimals are dbgen's physical representation only
-        for t in self.TABLES:
-            cols = con.execute(f"DESCRIBE {t}").fetchall()
-            proj = ", ".join(
+        return generate_once(
+            name, f"LOAD tpch; CALL dbgen(sf={sf})", self.TABLES,
+            lambda con, t: ", ".join(
                 f"{c}::DOUBLE AS {c}" if ty.startswith("DECIMAL") else c
-                for c, ty, *_ in cols
-            )
-            con.execute(
-                f"COPY (SELECT {proj} FROM {t}) TO '{out}/{t}.parquet' "
-                f"(FORMAT PARQUET)"
-            )
-        con.close()
-        open(os.path.join(out, "_DONE"), "w").close()
-        return out
+                for c, ty, *_ in con.execute(f"DESCRIBE {t}").fetchall()))
 
     def list_schemas(self) -> list[str]:
-        import os
-
         out = ["tiny"]
         for d in sorted(os.listdir(self.BASE)):
             if d.startswith("sf"):
                 out.append(d.replace(".", "_"))
-        if os.path.isdir(self.GEN_BASE):
-            for d in sorted(os.listdir(self.GEN_BASE)):
-                if d.startswith("sf"):
+        gen = os.path.join(SCRATCH, "tpch_dbgen")
+        if os.path.isdir(gen):
+            for d in sorted(os.listdir(gen)):
+                if os.path.exists(os.path.join(gen, d, "_DONE")):
                     name = d.replace(".", "_")
                     if name not in out:
                         out.append(name)
         return out
 
     def read(self, schema: str, table: str) -> DataFrame:
-        import os
-
         table = table.lower()
         if table not in self.TABLES:
             # validates the schema name/capacity before the table error,
@@ -932,17 +904,16 @@ class ConnectorCatalogs:
         self.tpch = TpchCatalog(spark)
 
 
-_CATALOGS: dict[int, ConnectorCatalogs] = {}
+_CATALOGS: dict[SparkSession, ConnectorCatalogs] = {}
 
 
 def get_catalogs(spark: SparkSession) -> ConnectorCatalogs:
     """One connector-state registry per SparkSession — connector tables
     outlive any single engine instance, like the reference's
     coordinator-held connector metadata."""
-    key = id(spark)
-    if key not in _CATALOGS:
-        _CATALOGS[key] = ConnectorCatalogs(spark)
-    return _CATALOGS[key]
+    if spark not in _CATALOGS:
+        _CATALOGS[spark] = ConnectorCatalogs(spark)
+    return _CATALOGS[spark]
 
 
 _T3 = rf"(memory|blackhole)\.({_NAME})\.({_NAME})"
@@ -1430,13 +1401,7 @@ def _http_log_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def write_http_log_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write the TSV request log the connector will read (distributed
     csv write — the fixture generation itself never collects)."""
-    import os
-    import shutil
-
-    path = os.path.join("/root/repo/.scratch",
-                        f"http_log_{os.path.basename(sf_dir.rstrip('/'))}")
-    if os.path.exists(path):
-        shutil.rmtree(path)
+    path = scratch_path(f"http_log_{os.path.basename(sf_dir.rstrip('/'))}")
     _http_log_frame(spark, sf_dir).write.option("sep", "\t").csv(path)
     return path
 
@@ -1491,13 +1456,9 @@ def write_example_fixture(spark: SparkSession, sf_dir: str) -> str:
     (example-metadata.json with relative source URIs)."""
     import glob
     import json
-    import os
-    import shutil
 
-    base = os.path.join("/root/repo/.scratch",
-                        f"example_http_{os.path.basename(sf_dir.rstrip('/'))}")
-    if os.path.exists(base):
-        shutil.rmtree(base)
+    base = scratch_path(
+        f"example_http_{os.path.basename(sf_dir.rstrip('/'))}")
     nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
     nation.select("n_nationkey", "n_name", "n_regionkey") \
         .repartition(2).write.csv(base)

@@ -31,6 +31,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from facebook_presto_spark.staging import scratch_path
+
 
 def create_table_as(
     spark: SparkSession,
@@ -184,17 +186,6 @@ def explain_analyze(df: DataFrame) -> str:
 # driver queries: verifiable write→read round-trips
 # ---------------------------------------------------------------------------
 
-_SCRATCH = "/root/repo/.scratch"
-
-
-def _scratch(name: str) -> str:
-    os.makedirs(_SCRATCH, exist_ok=True)
-    path = os.path.join(_SCRATCH, name)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    return path
-
-
 def ddl_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CTAS a filtered+projected orders slice, partitioned by priority, and
     aggregate the re-read table — verifies the full write/commit/read path."""
@@ -203,7 +194,7 @@ def ddl_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
     table = create_table_as(
-        spark, _scratch("ctas_orders"), slice_df,
+        spark, scratch_path("ctas_orders"), slice_df,
         partition_by=["o_orderpriority"], mode="overwrite",
     )
     return (
@@ -230,7 +221,7 @@ def ddl_insert_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
         "c_custkey", "c_acctbal", "c_nationkey"
     )
-    path = _scratch("dml_customer")
+    path = scratch_path("dml_customer")
     create_table_as(spark, path, cust.filter(F.col("c_acctbal") < 5000.0))
     insert_into(spark, path, cust.filter(F.col("c_acctbal") >= 5000.0))
     delete_where(spark, path, F.col("c_acctbal") < 0.0)

@@ -23,6 +23,7 @@ Usage::
 from __future__ import annotations
 
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,6 +31,10 @@ from facebook_presto_spark.catalog import DEFAULT_SF_DIR, register_views
 from facebook_presto_spark.session import get_spark
 from facebook_presto_spark.sqlfront import translate
 
+# concurrent rebuilds of one database's metadata views race
+# (TABLE_OR_VIEW_ALREADY_EXISTS); databases share no views, so one lock each
+_REBUILD_LOCKS = {db: threading.Lock() for db in (
+    "information_schema", "system_runtime", "system_jdbc", "system_metadata")}
 _PREPARE_RE = re.compile(r"^\s*PREPARE\s+([A-Za-z_]\w*)\s+FROM\s+(.+)$", re.I | re.S)
 _EXECUTE_RE = re.compile(
     r"^\s*EXECUTE\s+([A-Za-z_]\w*)(?:\s+USING\s+(.+))?\s*;?\s*$", re.I | re.S
@@ -497,28 +502,27 @@ class PrestoSparkEngine:
             # the reference populates information_schema from connector
             # metadata at query time (InformationSchemaPageSourceProvider);
             # rebuild the views from the live catalog — metadata-only
-            infoschema.refresh(
-                self.spark, privileges=self.grants.rows(),
-                view_definitions=self._views,
-            )
+            with _REBUILD_LOCKS["information_schema"]:
+                infoschema.refresh(self.spark, privileges=self.grants.rows(),
+                                   view_definitions=self._views)
         if systemtables.references_system_runtime(presto_sql):
             # system.runtime.{queries,nodes,tasks} — rebuilt from the
             # live registry/SparkContext, then addressed as the
             # system_runtime database (catalog prefixes are names here)
-            systemtables.refresh(
-                self.spark, self.runtime,
-                transactions=self.transactions.rows(),
-            )
+            with _REBUILD_LOCKS["system_runtime"]:
+                systemtables.refresh(self.spark, self.runtime,
+                                     transactions=self.transactions.rows())
             presto_sql = systemtables.rewrite_names(presto_sql)
         if systemtables.references_system_jdbc(presto_sql):
             # system.jdbc.* — the JDBC DatabaseMetaData surface
-            systemtables.refresh_jdbc(
-                self.spark, view_names=set(self._views)
-            )
+            with _REBUILD_LOCKS["system_jdbc"]:
+                systemtables.refresh_jdbc(self.spark,
+                                          view_names=set(self._views))
             presto_sql = systemtables.rewrite_jdbc_names(presto_sql)
         if systemtables.references_system_metadata(presto_sql):
             # system.metadata.{catalogs,*_properties}
-            systemtables.refresh_metadata(self.spark)
+            with _REBUILD_LOCKS["system_metadata"]:
+                systemtables.refresh_metadata(self.spark)
             presto_sql = systemtables.rewrite_metadata_names(presto_sql)
         if connectors.references(presto_sql):
             # memory/blackhole/localfile reads: register the referenced

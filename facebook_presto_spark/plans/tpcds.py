@@ -25,7 +25,7 @@ the driver contract (queries()/oracle_sql()) and the bench set:
 Query text is loaded from the reference's product-test corpus at run
 time (the same public TPC-DS spec text dsdgen ships); data comes from
 DuckDB's built-in dsdgen at the scale matching the requested sf_dir,
-staged once under .scratch/ and registered as tpcds_-prefixed temp
+staged once under staging.SCRATCH and registered as tpcds_-prefixed temp
 views so the shared TPC-H view names (customer, …) are never shadowed.
 Both sides strip the trailing LIMIT (ties under LIMIT are
 engine-defined; the full ordered multiset is the stronger check — see
@@ -35,18 +35,19 @@ list so the driver's name-sorted hash compare aligns columns.
 
 from __future__ import annotations
 
-import glob
 import os
 import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from facebook_presto_spark.staging import (
+    generate_once, session_views, split_staged)
+
 TPCDS_REF = (
     "/root/reference/presto-product-tests/src/main/resources/sql-tests/"
     "testcases/tpcds"
 )
-_SCRATCH = "/root/repo/.scratch"
 
 # picked queries → one marker per output column for the positional
 # alias wrap: "" = pass through, "c" = money → exact integer cents
@@ -95,20 +96,24 @@ def stage_dir(sf: str) -> str:
     """Generate (once) and return the parquet staging dir for dsdgen
     sf; generation is seconds at 0.01 and ~a minute at 0.1, amortized
     across every query of a driver/bench run."""
-    stage = f"{_SCRATCH}/tpcds_sf{sf}"
-    if not glob.glob(os.path.join(stage, "*.parquet")):
-        import duckdb
+    return generate_once(f"tpcds_sf{sf}", f"CALL dsdgen(sf={sf})", _TABLES)
 
-        os.makedirs(stage, exist_ok=True)
-        con = duckdb.connect()
-        con.execute(f"CALL dsdgen(sf={sf})")
-        for (t,) in con.execute("show tables").fetchall():
-            con.execute(
-                f"COPY (SELECT * FROM {t}) TO '{stage}/{t}.parquet' "
-                f"(FORMAT PARQUET)"
-            )
-        con.close()
-    return stage
+
+def register_views(spark: SparkSession, stage: str) -> None:
+    """Register ``stage``'s tables as tpcds_* temp views once per session
+    (guide §1: 24 catalyst round-trips per run taxed every bench entry)."""
+    def register() -> dict[str, DataFrame]:
+        # split-staged like the testdata (scan parallelism, §6: dsdgen's
+        # single file caps a 15 MB store_sales scan at ≤3 splits); the
+        # oracle reads the original.  DataFrame-backed: a SQL-text view
+        # re-infers its parquet schema on every reference (~100 ms)
+        views = {f"tpcds_{t}": spark.read.parquet(
+            split_staged(spark, f"{stage}/{t}.parquet")) for t in _TABLES}
+        for name, df in views.items():
+            df.createOrReplaceTempView(name)
+        return views
+
+    session_views(spark, ("tpcds", stage), register)
 
 
 def _load(name: str) -> str:
@@ -200,17 +205,6 @@ _PERSISTED: list[DataFrame] = []
 _PERSIST_MIN_REFS = 2
 _PERSIST_MIN_FACTS = 2
 _FACT_TABLES = ("tpcds_store_sales", "tpcds_catalog_sales", "tpcds_web_sales")
-
-# (session id, applicationId, stage path) the tpcds_* views were last
-# registered for.  Registering 24 parquet views is pure metadata DDL
-# (schema inference + catalog entries — no data is read or cached), but
-# it costs ~24 catalyst round-trips; re-issuing it on every timed run
-# taxed every tpcds bench entry (guide §1: the timed region should hold
-# the computation).  TEMP views are SparkSession-scoped (not
-# SparkContext-scoped), so the key includes the session's python object
-# id — a second session sharing the application (newSession()) must
-# re-register rather than hit a stale memo.
-_VIEWS_FOR: list[tuple[int, str, str] | None] = [None]
 
 # translation is deterministic text→text; cache per query name
 # ((ctes, main) pre-translated — ~30 ms per run for q14_1)
@@ -315,22 +309,7 @@ def _runner(name: str,
         scale = _sf_for(sf_dir)
         _LAST_STAGED_SF[0] = scale
         stage = stage_dir(scale)
-        views_key = (id(spark), spark.sparkContext.applicationId, stage)
-        if _VIEWS_FOR[0] != views_key:
-            # big staged tables go through the same multi-file split
-            # staging as the testdata readers (scan parallelism, §6):
-            # dsdgen's single-file parquet caps a 15 MB store_sales scan
-            # at ≤3 row-group splits; the oracle keeps reading the
-            # original single file
-            from facebook_presto_spark.plans.tpch import _split_staged
-
-            for t in _TABLES:
-                path = _split_staged(spark, f"{stage}/{t}.parquet")
-                spark.sql(
-                    f"CREATE OR REPLACE TEMP VIEW tpcds_{t} AS "
-                    f"SELECT * FROM parquet.`{path}`"
-                )
-            _VIEWS_FOR[0] = views_key
+        register_views(spark, stage)
         for df in _PERSISTED:
             df.unpersist()
         _PERSISTED.clear()

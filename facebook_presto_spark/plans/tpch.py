@@ -42,90 +42,12 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-# --- input split-staging for scan parallelism (guide §6) -------------
-# The driver's testdata parquet is ONE file with ONE row group per
-# table (verified with pyarrow), so a parquet scan cannot be split:
-# every table scan plans exactly one task and the whole scan+partial-agg
-# phase of every query runs serial regardless of core count (the r11
-# scaling block showed every tpch entry pinned at ≈1× from 8→32 cores).
-# §6's first lever of scan parallelism is split-sized files.  Tables
-# above the threshold are re-staged once per (file identity) into
-# n ≈ size/350KB part files under .scratch/split/ — a pure layout
-# change: the same row multiset (count- and schema-verified at stage
-# time; the DuckDB oracle keeps reading the ORIGINAL file, so the
-# driver's hash gate re-proves value identity end-to-end every round).
-# Nothing computed is cached: this is the input, re-laid-out, exactly
-# like the tpcds dsdgen staging one module over.  At 100 TB inputs
-# arrive in split-sized files and this path is a no-op by construction
-# (a single 100 TB single-row-group file would be broken the same way).
-_SPLIT_MIN_BYTES = 2 * 1024 * 1024
-# ~1.5 MB per part: enough files to occupy half the cores on the
-# largest local table while keeping per-task work well above task
-# overhead — 350 KB parts (32 files) measured WORSE under this box's
-# scheduling jitter (§2.2: fewer, larger map tasks)
-_SPLIT_TARGET_BYTES = 1536 * 1024
-_SPLIT_MAX_FILES = 16
-_SPLIT_DIR = "/root/repo/.scratch/split"
-_split_cache: dict[str, str] = {}
-
-
-def _split_staged(spark: SparkSession, path: str,
-                  min_bytes: int | None = None,
-                  files: int | None = None) -> str:
-    """Return ``path`` or a multi-file re-staging of it (see above).
-    ``min_bytes``/``files`` override the module defaults for callers
-    whose workload is CPU-bound per row (e.g. the differential-test
-    corpus, whose correlated-subquery cases run BroadcastNestedLoopJoin
-    over the stream side's partitions)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return path
-    if st.st_size < (min_bytes if min_bytes is not None else _SPLIT_MIN_BYTES):
-        return path
-    import hashlib
-    import json
-    import shutil
-
-    n = files or int(
-        min(_SPLIT_MAX_FILES, max(4, st.st_size // _SPLIT_TARGET_BYTES)))
-    cached = _split_cache.get((path, n))
-    if cached is not None:
-        return cached
-    ident = {"src": path, "size": st.st_size, "mtime_ns": st.st_mtime_ns,
-             "files": n}
-    stem = os.path.basename(path).removesuffix(".parquet")
-    key = hashlib.sha1(json.dumps(ident, sort_keys=True).encode()).hexdigest()[:12]
-    dest = os.path.join(_SPLIT_DIR, f"{stem}_{key}")
-    marker = os.path.join(dest, "_staged.json")
-    if not os.path.exists(marker):
-        src = spark.read.parquet(path)
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        src.repartition(n).write.mode("overwrite").parquet(tmp)
-        out = spark.read.parquet(tmp)
-        # layout change only: schema and row count must survive exactly
-        # (value identity is re-proven by the driver's oracle hash gate)
-        if out.schema != src.schema or out.count() != src.count():
-            shutil.rmtree(tmp, ignore_errors=True)
-            _split_cache[(path, n)] = path
-            return path
-        with open(os.path.join(tmp, "_staged.json"), "w") as f:
-            json.dump(ident, f)
-        try:
-            os.rename(tmp, dest)
-        except OSError:  # concurrent stager won the rename
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(marker):
-                _split_cache[(path, n)] = path
-                return path
-    _split_cache[(path, n)] = dest
-    return dest
+from facebook_presto_spark.staging import split_staged
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(
-        _split_staged(spark, os.path.join(sf_dir, f"{name}.parquet"))
+        split_staged(spark, os.path.join(sf_dir, f"{name}.parquet"))
     )
 
 

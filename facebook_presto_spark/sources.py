@@ -25,21 +25,11 @@ point the engine at that (exactly what `ddl.create_table_as` does).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_SCRATCH = "/root/repo/.scratch"
-
-
-def _scratch(name: str) -> str:
-    os.makedirs(_SCRATCH, exist_ok=True)
-    path = os.path.join(_SCRATCH, name)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    return path
-
+from facebook_presto_spark.staging import scratch_path
 
 def write_read(df: DataFrame, fmt: str, path: str, **options: str) -> DataFrame:
     """Write ``df`` in ``fmt`` and read it back with an explicit schema
@@ -75,7 +65,7 @@ def _agg(df: DataFrame) -> DataFrame:
 def _roundtrip(fmt: str, name: str | None = None, **options: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
-        back = write_read(nation, fmt, _scratch(f"src_{name or fmt}"), **options)
+        back = write_read(nation, fmt, scratch_path(f"src_{name or fmt}"), **options)
         return _agg(back)
 
     return run
@@ -130,7 +120,7 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     view → aggregate; the oracle checks against the original parquet, so
     a hash-match proves lossless JDBC type round-tripping."""
     nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
-    db = _scratch("jdbc_derby")
+    db = scratch_path("jdbc_derby")
     url = f"jdbc:derby:{db};create=true"
     jdbc_write(nation, url, "NATION", driver=_DERBY_DRIVER)
     back = register_jdbc(spark, "nation_jdbc", url, "NATION",
@@ -155,7 +145,7 @@ def source_jdbc_split_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
-    db = _scratch("jdbc_derby_splits")
+    db = scratch_path("jdbc_derby_splits")
     url = f"jdbc:derby:{db};create=true"
     jdbc_write(cust, url, "CUSTOMER", driver=_DERBY_DRIVER)
     hi = cust.agg(F.max("c_custkey")).first()[0]
@@ -274,7 +264,7 @@ def source_kafka_offset_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_message"
         ),
     )
-    seg_path = _scratch("kafka_segments")
+    seg_path = scratch_path("kafka_segments")
     topic.write.mode("overwrite").parquet(seg_path)
     got = kafka_segment_read(spark, seg_path, KAFKA_RANGES)
     parsed = got.select(
@@ -336,7 +326,7 @@ def source_kafka_interleaved_splits(
         ((F.col("_partition_offset") / 64).cast("int") * 3
          + F.col("_partition_id")) % 4,
     )
-    seg_path = _scratch("kafka_interleaved_segments")
+    seg_path = scratch_path("kafka_interleaved_segments")
     seg.write.mode("overwrite").partitionBy("_segment").parquet(seg_path)
     reads = [
         kafka_segment_read(spark, seg_path, {p: (s, e)})

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from facebook_presto_spark.catalog import events_table
 from facebook_presto_spark.plans.tpch import cents
+from facebook_presto_spark.staging import SCRATCH
 
 GAP = "1 hour"  # session gap; ~15% of the driver's inter-event gaps are <1h
 
@@ -174,7 +175,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = os.path.join(sf_dir, "events.parquet")
     stage = os.path.join(
-        "/tmp/fps_stream", hashlib.md5(src.encode()).hexdigest()[:12]
+        SCRATCH, "stream", hashlib.md5(src.encode()).hexdigest()[:12]
     )
     os.makedirs(stage, exist_ok=True)
     link = os.path.join(stage, "events.parquet")

@@ -206,20 +206,26 @@ class _Oracle:
 
         from facebook_presto_spark.compat import tpch_tiny
 
-        self._con = duckdb.connect()
-        tpch_tiny.register_connector_views(self._spark, self._con)
+        con = duckdb.connect()
+        tpch_tiny.register_connector_views(self._spark, con)
+        # publish only a connection whose views are all registered
+        self._con = con
 
     def run(self, sql: str):
         # cursor() opens a sibling connection to the same in-memory db —
-        # DuckDB's documented pattern for concurrent callers; _rebuild is
-        # serialized so a poisoned connection is replaced exactly once
+        # DuckDB's documented pattern for concurrent callers.  A poisoned
+        # connection is replaced exactly once: threads that failed on it
+        # rebuild only if no other thread has replaced it yet, then all
+        # retry on the current one
+        con = self._con
         try:
-            return self._con.cursor().execute(sql).fetchall()
+            return con.cursor().execute(sql).fetchall()
         except Exception as e:
             if "pending" not in str(e):
                 raise
             with self._lock:
-                self._rebuild()
+                if self._con is con:
+                    self._rebuild()
             return self._con.cursor().execute(sql).fetchall()
 
 

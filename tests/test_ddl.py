@@ -156,6 +156,49 @@ def test_view_introspection(spark, sf_dir):
         engine.sql("SHOW CREATE VIEW v_cheap")
 
 
+def test_concurrent_metadata_statements(spark, sf_dir):
+    """Metadata statements rebuild their information_schema / system.*
+    views on every call; four threads issuing them at once must all
+    succeed (concurrent CREATE OR REPLACE VIEW of one view raced into
+    TABLE_OR_VIEW_ALREADY_EXISTS)."""
+    import sys
+    import threading
+
+    from facebook_presto_spark.engine import PrestoSparkEngine
+
+    engine = PrestoSparkEngine.for_dir(sf_dir, spark=spark)
+    statements = [
+        "SELECT count(*) FROM information_schema.tables",
+        "SELECT count(*) FROM information_schema.columns",
+        "SELECT count(*) FROM system.jdbc.tables",
+        "SELECT count(*) FROM system.metadata.catalogs",
+    ]
+    errors = []
+    barrier = threading.Barrier(4)
+
+    def run():
+        try:
+            barrier.wait(timeout=60)
+            for i in range(4):  # every thread on the same view at once
+                sql = statements[i % len(statements)]
+                assert engine.sql(sql).first()[0] > 0
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(str(e)[:300])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run) for _ in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+
+
 def test_show_create_table(spark, sf_dir):
     """ShowQueriesRewrite.visitShowCreate TABLE arm: Presto-dialect DDL
     rendered from live schema with StandardTypes names."""

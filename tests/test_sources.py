@@ -7,13 +7,14 @@ The aggregate round-trips themselves are oracle-verified via selfcheck
 import pytest
 
 from facebook_presto_spark import sources
+from facebook_presto_spark.staging import scratch_path
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_jdbc_roundtrip_preserves_rows(spark):
     nation = spark.read.parquet(f"{SF}/nation.parquet")
-    db = sources._scratch("jdbc_derby_test")
+    db = scratch_path("jdbc_derby_test")
     url = f"jdbc:derby:{db};create=true"
     sources.jdbc_write(nation, url, "NATION_T", driver=sources._DERBY_DRIVER)
     back = sources.register_jdbc(
@@ -28,7 +29,7 @@ def test_jdbc_parallel_split_read(spark):
     """partitionColumn split generation — the BaseJdbcClient QueryBuilder
     range analogue: N partitions, same rows."""
     nation = spark.read.parquet(f"{SF}/nation.parquet")
-    db = sources._scratch("jdbc_derby_split")
+    db = scratch_path("jdbc_derby_split")
     url = f"jdbc:derby:{db};create=true"
     sources.jdbc_write(nation, url, "NATION_S", driver=sources._DERBY_DRIVER)
     back = sources.register_jdbc(
@@ -48,7 +49,7 @@ def test_kafka_segment_offset_ranges_are_half_open(spark):
         "CAST(id AS STRING) AS _key",
         "CAST(id AS STRING) AS _message",
     )
-    path = sources._scratch("kafka_seg_test")
+    path = scratch_path("kafka_seg_test")
     df.write.mode("overwrite").parquet(path)
     got = sources.kafka_segment_read(spark, path, {0: (10, 20), 1: (0, 5)})
     rows = got.collect()

@@ -27,7 +27,6 @@ TPCDS_DIR = (
     "testcases/tpcds"
 )
 SF = "0.01"
-STAGE = f"/root/repo/.scratch/tpcds_sf{SF}"
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(TPCDS_DIR), reason="reference tpcds corpus not present"
@@ -37,31 +36,18 @@ pytestmark = pytest.mark.skipif(
 KNOWN = {}
 
 
-def _gen_tpcds():
-    import duckdb
-
-    if os.path.isdir(STAGE) and glob.glob(os.path.join(STAGE, "*.parquet")):
-        return
-    os.makedirs(STAGE, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(f"CALL dsdgen(sf={SF})")
-    for (t,) in con.execute("show tables").fetchall():
-        con.execute(
-            f"COPY (SELECT * FROM {t}) TO '{STAGE}/{t}.parquet' (FORMAT PARQUET)"
-        )
-
-
 @pytest.fixture(scope="module")
 def tpcds_env(spark, sf_dir):
     import duckdb
 
     from facebook_presto_spark.engine import PrestoSparkEngine
+    from facebook_presto_spark.plans.tpcds import stage_dir
 
-    _gen_tpcds()
+    stage = stage_dir(SF)
     engine = PrestoSparkEngine.for_dir(sf_dir, spark=spark)
     con = duckdb.connect()
     tables = []
-    for p in sorted(glob.glob(os.path.join(STAGE, "*.parquet"))):
+    for p in sorted(glob.glob(os.path.join(stage, "*.parquet"))):
         t = os.path.basename(p).removesuffix(".parquet")
         tables.append(t)
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

@@ -12,7 +12,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -31,7 +32,7 @@ def main() -> int:
     spark = get_spark("dump_plans")
     queries = entry.queries()
     picked = names or bench.HEADLINE
-    outdir = f"/root/repo/plans/{tag}"
+    outdir = os.path.join(ROOT, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     for name in picked:
         if name not in queries:

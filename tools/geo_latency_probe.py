@@ -9,11 +9,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 # executor Python workers need the repo on their path too (the Arrow
 # kernel UDFs import facebook_presto_spark.functions.geo_kernel)
 os.environ["PYTHONPATH"] = (
-    "/root/repo" + os.pathsep + os.environ.get("PYTHONPATH", "")
+    ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 )
 
 from pyspark.sql import SparkSession

@@ -10,9 +10,11 @@ Usage: python tools/scalar_assert_probe.py [file-substring]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 from facebook_presto_spark.compat.scalar_assertions import match, to_py  # noqa: E402

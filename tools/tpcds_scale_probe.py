@@ -11,11 +11,13 @@ Usage: python tools/tpcds_scale_probe.py [runs]
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -23,16 +25,24 @@ def main() -> None:
     from facebook_presto_spark.plans import tpcds as t
     from facebook_presto_spark.session import get_spark
     from facebook_presto_spark.sqlfront import translate
+    from facebook_presto_spark.staging import session_views
 
     spark = get_spark("tpcds-scale")
     results: dict[str, dict[str, tuple[float, float]]] = {}
     for sf in ("0.1", "1"):
         stage = t.stage_dir(sf)
-        for tab in t._TABLES:
-            spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW tpcds_{tab} AS "
-                f"SELECT * FROM parquet.`{stage}/{tab}.parquet`"
-            )
+
+        def register(stage=stage):
+            # the original single-file layout, not the runner's split one
+            for tab in t._TABLES:
+                spark.sql(
+                    f"CREATE OR REPLACE TEMP VIEW tpcds_{tab} AS "
+                    f"SELECT * FROM parquet.`{stage}/{tab}.parquet`"
+                )
+            return {f"tpcds_{tab}": spark.table(f"tpcds_{tab}")
+                    for tab in t._TABLES}
+
+        session_views(spark, ("tpcds-unsplit", stage), register)
         for name, markers in t.PICKS.items():
             sql = translate(t._wrap(t._load(name), markers))
             df = spark.sql(sql)
